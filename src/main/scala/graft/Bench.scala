@@ -1,698 +1,114 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.collection.mutable
+import scala.util.control.NonFatal
 
-/** Benchmark entry: times the headline query set (SparkEntry.benchQueries)
-  * on SPARK_GRAFT_SF_DIR and prints one JSON line. A warmup query runs
-  * first so JIT/codegen cost doesn't land on the first measured query;
-  * each query is executed with count() so the full plan runs but
-  * nothing is materialized on the driver.
+import org.apache.spark.sql.SparkSession
+import org.json4s._
+import org.json4s.jackson.JsonMethods.{compact, render}
+
+/** Benchmark entry: times queries on SPARK_GRAFT_SF_DIR and prints one
+  * JSON object as the last stdout line.
   *
-  * Trustworthiness machinery (this host shows rare bimodal ~2-minute
-  * stalls on a single query — timeout-shaped, not load/GC/steal, and
-  * PROCESS-WINDOW-shaped: a stalled JVM can stay stalled across
-  * cooldowns while a fresh JVM run of the same query is clean):
-  *  - per-query best-known floors persist across runs in BENCH_floor.json
-  *    (keyed by sf dir basename); each run takes min(measured, prior runs)
-  *    as the floor and tightens the file;
-  *  - outliers (>3x median, or >2.5x their own persisted floor with at
-  *    least 1s of excess) are re-timed after a cooldown (default 30s),
-  *    up to two rounds;
-  *  - queries STILL outlier-shaped after the in-process retries are
-  *    re-timed once more in a FRESH JVM (same classpath, its own
-  *    SparkSession) and the better time is spliced in — the r4 verdict's
-  *    prescription, because the stall mode follows the process window;
-  *  - the FIRST pass and every retry tier (in-process rounds AND the
-  *    fresh JVM) first wait for the host to go quiet — loadavg <=
-  *    min(cores/2, 4.0) (SPARK_GRAFT_QUIET_LOAD; the 4.0 is measured:
-  *    this host drifts ~20-25% at loadavg 6.5, so a cores-derived
-  *    threshold never fires), polled every 5s for up to
-  *    SPARK_GRAFT_QUIET_MAX_WAIT_SEC (default 240s) — so a sample
-  *    measures the query, not the contention; the total wait is stamped
-  *    as `quiet_wait_sec` and each query's accepted sample carries the
-  *    loadavg at its start in `query_load` (r15/r16 verdicts: four
-  *    rounds running, the official window started loaded and needed
-  *    retry roulette);
-  *  - sample ACCEPTANCE is load-gated, not just the window start and
-  *    the retry tiers (r19 verdict item 1: the official r19 window
-  *    accepted 34 of 47 samples above the quiet gate because the floor
-  *    band was the only acceptance rule — the host loaded up
-  *    mid-window and contended samples inside the band sailed
-  *    through). The gated quantity is the EXTERNAL load: raw loadavg
-  *    minus this JVM's own CPU use smoothed with the kernel's ~60 s
-  *    decay (SelfLoadEma) — the bench's own local[32] bursts push raw
-  *    loadavg to 6–15 on an otherwise-idle host, so raw stamps mostly
-  *    measured the bench benching (that is much of what r19's 34/47
-  *    "loaded" stamps were). A sample whose start external load
-  *    exceeds the quiet gate cannot be accepted while it is the
-  *    query's ONLY sample — it re-times through the existing tiers
-  *    even when inside the floor band (count stamped as
-  *    `load_forced_retimes`); once any quiet sample exists, acceptance
-  *    is min over the QUIET pool, so in a clean window every stamped
-  *    `query_load` is <= the gate. A query whose every sample stayed
-  *    externally loaded taints `clean:false` ("accepted above
-  *    loadavg");
-  *  - the emitted JSON carries `first_pass_total` (untouched single-run
-  *    measurement), `window_total` (best-of in-window), and `value` (the
-  *    headline). When every query lands within 2.5x of its floor the
-  *    headline IS the measured best-of and `"clean":true`; if pollution
-  *    survives even the fresh JVM, `"clean":false` and the headline
-  *    falls back to `floor_total` — every entry of which is a real
-  *    measured min — so the driver's gate never ingests a number the
-  *    artifact itself says is garbage;
-  *  - the JSON self-marks `"suspect":true` with reasons when loadavg
-  *    exceeds cores*1.5 or any final headline timing is still >2.5x its
-  *    persisted floor.
+  * Query names come from the args; with none it times
+  * [[SparkEntry.benchQueries]]. One untimed round warms the JIT, codegen
+  * and parquet footers; then [[Reps]] rounds run interleaved in this JVM
+  * (q1 q2 … q1 q2 …), so host drift lands on every query alike. A sample
+  * builds the query and writes every row and column to the `noop` sink:
+  * `count()` would let Catalyst prune the projections, windows and sorts
+  * that do not change the row count. Dataset caches are cleared before
+  * each query.
+  *
+  * The line carries `value` (the sum of the per-query medians, or null
+  * when any query failed: a total that skips a query reads as a
+  * speedup), per-query median/min/max, `failed` (name → message) and the
+  * host shape.
+  *
+  * Session: SPARK_GRAFT_CPUS cores (default all), SPARK_GRAFT_MASTER
+  * (default `local[cpus]`), SPARK_GRAFT_SHUFFLE_PARTS shuffle partitions
+  * (default cpus), UTC, no UI.
   */
 object Bench {
-  private val FloorFile = "BENCH_floor.json"
-
-  /** A sample is over its floor band — and must re-time / taints the
-    * clean verdict — when it exceeds 1.75x the floor with 1.5s of
-    * excess (r10 verdict: s07's 3.67s over a 1.51s floor was only
-    * 2.42x, under the original 2.5x ratio gate, but carried +2.16s of
-    * real excess and landed in a clean:true window), OR 2.0x the floor
-    * with 0.3s of excess. The second term's excess threshold was
-    * 0.75s until round 19 — r18's weak pair (t09 0.961s over a 0.443s
-    * floor, d08 1.219s over 0.580s: both past the judge's 2x gate
-    * with ~0.5s of excess) lived exactly in the spared-jitter zone
-    * that threshold created. The judge's 2x gate has NO excess floor,
-    * so any >=2x reading with non-trivial excess must be re-timed;
-    * retrying a sub-second query costs ~1s against a quiet-gated
-    * host, a weak grade costs the round. Only sub-0.3s wobble (pure
-    * timer noise on tiny floors) stays spared. */
-  private[graft] def overFloorBand(floor: Double, v: Double): Boolean =
-    (v > 1.75 * floor && v > floor + 1.5) ||
-      (v > 2.0 * floor && v > floor + 0.3)
-
-  /** This JVM's own CPU use in cores, smoothed with the same ~60 s
-    * exponential decay the kernel applies to the 1-minute loadavg —
-    * the correction that makes a mid-window load stamp mean
-    * CONTENTION instead of "the bench was benching". A local[32]
-    * query burst pushes the raw 1-minute loadavg to 6–15 all by
-    * itself (observed: 26 of 45 first-pass samples of a quiet-host
-    * window stamped above the 4.0 gate with zero external load), so
-    * raw loadavg cannot gate sample acceptance; `raw − own − inherited`
-    * can. Updates fold the process CPU consumed since the last call
-    * into the EMA over the elapsed wall interval — the continuous
-    * analog of the kernel's 5 s-sampled decay. */
-  private[graft] final class SelfLoadEma(tau: Double = 60.0) {
-    private var ema = 0.0
-    private var last: Option[(Long, Long)] = None // (wallNs, cpuNs)
-    /** Feed a (wall, cpu) sample pair; returns the updated EMA. */
-    def update(wallNs: Long, cpuNs: Long): Double = {
-      last match {
-        case Some((w0, c0)) if wallNs > w0 =>
-          val dt = (wallNs - w0) / 1e9
-          val cores = math.max(0.0, (cpuNs - c0) / 1e9 / dt)
-          val a = math.exp(-dt / tau)
-          ema = ema * a + cores * (1 - a)
-        case _ => ()
-      }
-      last = Some((wallNs, cpuNs))
-      ema
-    }
-    def value: Double = ema
-  }
-
-  /** Env var: the parent bench JVM's own-load EMA at fork time. The
-    * kernel's loadavg remembers the PARENT's just-finished window for
-    * ~a minute after the fresh-JVM child starts; the child subtracts
-    * this handed-down value (decayed from its start time) so it does
-    * not read its parent's cooling burst as external contention. */
-  private[graft] val ParentEmaEnv = "SPARK_GRAFT_PARENT_EMA"
-
-  /** The load-gated acceptance policy over a query's (value, load)
-    * samples: min over the samples taken at or under the quiet gate;
-    * only when NO quiet sample exists, min over everything (the loaded
-    * min is reported but the caller taints the clean verdict). Failed
-    * samples (value < 0) never participate; unknown loads (-1) count as
-    * loaded. Returns (value, load) of the accepted sample, or (-1,-1)
-    * when no valid sample exists. */
-  private[graft] def acceptedSample(zs: Seq[(Double, Double)],
-      quietLoad: Double): (Double, Double) = {
-    val valid = zs.filter(_._1 >= 0)
-    val quiet = valid.filter { case (_, l) => l >= 0 && l <= quietLoad }
-    val pool = if (quiet.nonEmpty) quiet else valid
-    if (pool.isEmpty) (-1.0, -1.0) else pool.minBy(_._1)
-  }
-
-  /** Comma-separated query names: when set, this process is a fresh-JVM
-    * re-timer child — time ONLY those queries once and print a marked
-    * JSON line for the parent to splice. */
-  private val RetimeEnv = "SPARK_GRAFT_RETIME"
-  private val RetimeMarker = "RETIME_JSON:"
-
-  /** Key suffix the re-timer child uses to report the loadavg it saw at
-    * each query's start alongside the timing — the parent strips these
-    * into the per-query load stamp instead of treating them as timings. */
-  private[graft] val LoadKeySuffix = "__load"
-
-  /** Wait (polling `load` every `pollSec`) until the 1-minute loadavg
-    * drops to `threshold` or `maxWaitSec` elapses. Returns
-    * (secondsWaited, finalLoad). Retrying a stalled query while the host
-    * is still contended just burns the retry budget and re-measures the
-    * contention (r13–r15: three official windows in a row needed retry
-    * roulette on a loaded host) — so every retry tier now waits for a
-    * quiet host first, and the wait itself is stamped into the artifact.
-    * `load`/`sleep` are injected so the policy is testable without
-    * wall-clock time. */
-  private[graft] def awaitQuiet(threshold: Double, maxWaitSec: Int,
-      pollSec: Int, load: () => Double,
-      sleep: Long => Unit): (Double, Double) = {
-    val budgetMs = maxWaitSec.toLong * 1000L
-    var waitedMs = 0L
-    var l = load()
-    while (l > threshold && waitedMs < budgetMs) {
-      val step = math.min(pollSec.toLong * 1000L, budgetMs - waitedMs)
-      sleep(step)
-      waitedMs += step
-      l = load()
-    }
-    (waitedMs / 1000.0, l)
-  }
-
-  /** Re-time `names` in a freshly forked JVM (inherits this JVM's
-    * classpath + the Spark add-opens set). Returns name -> seconds, or
-    * Map.empty when the child could not run — callers treat that as
-    * "no better sample". */
-  private def retimeFreshJvm(names: Seq[String],
-      parentEma: Double): Map[String, Double] = try {
-    val javaBin = new java.io.File(
-      new java.io.File(System.getProperty("java.home"), "bin"), "java").getPath
-    val addOpens = Seq(
-      "java.base/java.lang", "java.base/java.lang.invoke",
-      "java.base/java.lang.reflect", "java.base/java.io",
-      "java.base/java.net", "java.base/java.nio",
-      "java.base/java.util", "java.base/java.util.concurrent",
-      "java.base/java.util.concurrent.atomic",
-      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-      "java.base/sun.security.action", "java.base/sun.util.calendar",
-    ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-    val cmd = (Seq(javaBin) ++ addOpens ++ Seq(
-      s"-Xmx${sys.env.getOrElse("SPARK_DRIVER_MEM", "8g")}",
-      "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
-      "-cp", System.getProperty("java.class.path"),
-      "graft.Bench")).toList
-    val pb = new ProcessBuilder(cmd: _*)
-    pb.environment().put(RetimeEnv, names.mkString(","))
-    // the kernel's loadavg remembers this JVM's window for ~a minute —
-    // hand the child our own-load EMA so it doesn't read the parent's
-    // cooling burst as external contention
-    pb.environment().put(ParentEmaEnv, f"$parentEma%.3f")
-    pb.redirectErrorStream(false)
-    pb.redirectError(ProcessBuilder.Redirect.INHERIT) // Spark logs stay visible
-    val proc = pb.start()
-    val out = new String(proc.getInputStream.readAllBytes(), "UTF-8")
-    val code = proc.waitFor()
-    if (code != 0) {
-      System.err.println(s"[bench] fresh-JVM re-time exited $code"); Map.empty
-    } else out.linesIterator.find(_.startsWith(RetimeMarker)) match {
-      case None =>
-        System.err.println("[bench] fresh-JVM re-time printed no result line")
-        Map.empty
-      case Some(line) =>
-        """"([^"]+)":(-?[0-9.eE+-]+)""".r.findAllMatchIn(line.stripPrefix(RetimeMarker))
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-    }
-  } catch { case e: Exception =>
-    System.err.println(s"[bench] fresh-JVM re-time failed: ${e.getMessage}")
-    Map.empty
-  }
-
-  /** Flat {"sf0.1/q01":1.234,...} map; hand-rolled format we control, so
-    * a regex parse is exact (no JSON lib dependency drift). */
-  private[graft] def loadFloors(
-      f: java.io.File = new java.io.File(FloorFile)): Map[String, Double] = {
-    if (!f.isFile) Map.empty
-    else {
-      val txt = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-      // tolerate whitespace after the colon: a floor file round-tripped
-      // through a pretty-printing JSON tool must not silently parse as
-      // EMPTY and wipe every floor on the next save
-      """"([^"]+)":\s*([0-9.eE+-]+)""".r.findAllMatchIn(txt)
-        .map(m => m.group(1) -> m.group(2).toDouble).toMap
-    }
-  }
-
-  private[graft] def saveFloors(floors: Map[String, Double],
-      file: String = FloorFile): Unit = {
-    val body = floors.toSeq.sorted
-      .map { case (k, v) => "\"" + k + f"""\":$v%.3f""" }
-      .mkString("{", ",", "}")
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(file), body.getBytes("UTF-8"))
-  }
-
-  /** Floor-epoch discipline (r19 verdict item 3): a floor seeded under
-    * DIFFERENT operator code is not a fair regression denominator — the
-    * d04 pattern: guard-era walls judged against a pre-guard 1.353 s
-    * floor graded `weak` for two rounds straight. When a round's diff
-    * touches an operator on a query's path, [[graft.tools.FloorRetire]]
-    * moves every `<ns>/<query>` floor to `<ns>/<query>@retired-<tag>`
-    * (kept for history, never matched by floorOf, never re-tightened),
-    * so the next clean window re-seeds the live key under the current
-    * code. The over-band rule therefore only ever compares same-epoch
-    * values: floorOf reads the exact live key, and retired keys are
-    * preserved verbatim across saves. */
-  private[graft] def retireFloors(floors: Map[String, Double],
-      queries: Seq[String], tag: String): Map[String, Double] = {
-    val qset = queries.toSet
-    floors.map { case (k, v) =>
-      val live = !k.contains("@retired")
-      val name = k.substring(k.lastIndexOf('/') + 1)
-      if (live && qset.contains(name)) s"$k@retired-$tag" -> v
-      else k -> v
-    }
-  }
+  val Reps = 3
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // a non-default master (the local-cluster smoke) gets its OWN floor
-    // namespace: mixing configs in one key would tighten the canonical
-    // local[N] floors with numbers from a different execution model
-    // (observed: local-cluster q01 at 0.43s vs the 1.20s local[32]
-    // floor) and then flag every later canonical run as over-band
-    val sfKey = sys.env.get("SPARK_GRAFT_MASTER") match {
-      case Some(m) => s"$m/${new java.io.File(sfDir).getName}"
-      case None    => new java.io.File(sfDir).getName
-    }
-    val cooldownSec = sys.env.getOrElse("SPARK_GRAFT_COOLDOWN_SEC", "30").toInt
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors().toString)
-    // SPARK_GRAFT_MASTER lets the SCALING.md smoke run the same bench
-    // under local-cluster[n,cores,mem] — separate executor JVMs with
-    // real serialization/broadcast boundaries that local[n] hides.
-    // Executors forked by local-cluster don't inherit the sbt
-    // classpath, so it is passed through explicitly there.
     val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
+    val shuffleParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTS", cpus)
     val builder = SparkSession.builder()
       .master(master)
-      // SPARK_GRAFT_SHUFFLE_PARTS: above-sf0.1 runs scale partitions
-      // proportionally with data (the SCALING.md round-9 lesson);
-      // the driver's sf0.1 runs leave it unset (= cpus, unchanged)
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTS", cpus))
+      .config("spark.sql.shuffle.partitions", shuffleParts)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+    // executors forked by local-cluster don't inherit this JVM's classpath
     val spark = (if (master.startsWith("local-cluster"))
         builder.config("spark.executor.extraClassPath",
           System.getProperty("java.class.path"))
       else builder).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    def loadAvg: Double =
-      java.lang.management.ManagementFactory.getOperatingSystemMXBean
-        .getSystemLoadAverage
-    // EXTERNAL load = raw loadavg − this JVM's own smoothed CPU use −
-    // the parent bench's decaying handoff (fresh-JVM child only). All
-    // gating and stamping below reads THIS, not raw loadavg: the bench
-    // itself pushes the raw 1-minute loadavg past any sane gate
-    // mid-window, and a gate that trips on its own measurement work
-    // would re-time the whole window forever (see SelfLoadEma).
-    def processCpuNs: Long =
-      java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
-        case b: com.sun.management.OperatingSystemMXBean => b.getProcessCpuTime
-        case _ => -1L
-      }
-    val selfEma = new SelfLoadEma()
-    val parentEma0 = sys.env.get(ParentEmaEnv).map(_.toDouble).getOrElse(0.0)
-    val jvmStartNs = System.nanoTime()
-    def extLoad: Double = {
-      val cpu = processCpuNs
-      val own =
-        if (cpu >= 0) selfEma.update(System.nanoTime(), cpu) else 0.0
-      val inherited =
-        parentEma0 * math.exp(-(System.nanoTime() - jvmStartNs) / 1e9 / 60.0)
-      math.max(0.0, loadAvg - own - inherited)
-    }
-    val cores0 = Runtime.getRuntime.availableProcessors()
-    // quiet-host gate: the official window must START quiet, not just
-    // retry quiet (r16 verdict: the first pass began at loadavg 6.5 and
-    // needed retry roulette; the builder's own window at loadavg 2.2 was
-    // 20% faster end to end). The default threshold is MEASURED, not
-    // derived from cores: this host's drift is already ~20-25% at
-    // loadavg 6.5, so cores/2 = 16 never fired. 4.0 is the highest
-    // 1-minute loadavg at which committed windows have matched floors.
-    val quietLoad = sys.env.get("SPARK_GRAFT_QUIET_LOAD")
-      .map(_.toDouble).getOrElse(math.min(cores0 / 2.0, 4.0))
-    val quietMaxWaitSec =
-      sys.env.getOrElse("SPARK_GRAFT_QUIET_MAX_WAIT_SEC", "240").toInt
-    var quietWaitSec = 0.0
-    def gateOnQuietHost(tier: String, threshold: Double = quietLoad,
-        maxWait: Int = quietMaxWaitSec): Unit = {
-      val (waited, l) = awaitQuiet(threshold, maxWait, 5,
-        () => extLoad, Thread.sleep)
-      quietWaitSec += waited
-      if (waited > 0)
-        System.err.println(f"[bench] $tier: waited $waited%.0fs for loadavg " +
-          f"<= $threshold%.1f (now $l%.2f)")
-      if (l > threshold)
-        System.err.println(f"[bench] $tier: host still loaded ($l%.2f) after " +
-          f"$maxWait%ds wait budget — re-timing anyway")
-    }
+    val names = if (args.nonEmpty) args.toSeq else SparkEntry.benchQueries
+    val queries = SparkEntry.queries
+    val failed = mutable.LinkedHashMap[String, String]()
+    val samples = mutable.Map[String, Vector[Double]]().withDefaultValue(Vector.empty)
 
-    // gate the FIRST pass too (r16 verdict prescription 2: three rounds
-    // of retry roulette started because the first pass launched into a
-    // loaded host). Gated BEFORE the warmup so the reading reflects
-    // external load, not our own parquet footer reads. The fresh-JVM
-    // re-timer child skips it — its parent already gated.
-    //
-    // The first pass requires MARGIN under the gate (r18 verdict item
-    // 1: the official r18 window started at loadavg 4.03 — passing the
-    // 4.0 gate at the boundary — and carried 10 retried queries plus
-    // two >2x-floor readings on untouched plans; the same build in a
-    // genuinely quiet window read 6% faster end to end). A window that
-    // BEGINS at the boundary has no headroom for its own load, so the
-    // start gate is quietLoad − 1.0 (floored at 1.0) with a longer
-    // dedicated wait budget; retry tiers keep the plain gate — they
-    // only need the host no worse than the sample they're replacing.
-    val firstPassLoad = math.max(1.0, quietLoad - 1.0)
-    val firstWaitSec = sys.env
-      .getOrElse("SPARK_GRAFT_FIRST_QUIET_MAX_WAIT_SEC", "900").toInt
-    if (!sys.env.contains(RetimeEnv))
-      gateOnQuietHost("first pass", firstPassLoad, firstWaitSec)
-
-    // warmup: JIT + codegen + parquet footer reads off the clock
-    Tables(spark, sfDir, "lineitem").count()
-    Tables(spark, sfDir, "orders").count()
-    val loadStart = loadAvg
-
-    // per-query EXTERNAL load (see extLoad) at each sample's start,
-    // parallel to `samples`; the stamp emitted with the artifact is the
-    // load of the sample that became the accepted timing for each query
-    val loadHist =
-      scala.collection.mutable.Map[String, Vector[Double]]()
-    // a failed query must be visible, not a fast-looking timing: it is
-    // reported as -1 and excluded from the total, with its name listed
-    def time(names: Seq[String]): Seq[(String, Double)] = names.map { name =>
-      val fn = SparkEntry.queries(name)
-      spark.catalog.clearCache() // isolate queries: no cross-query cache reuse
-      loadHist(name) = loadHist.getOrElse(name, Vector.empty) :+ extLoad
-      val t0 = System.nanoTime()
-      val ok = try { fn(spark, sfDir).count(); true }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}"); false }
-      name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
-    }
-    def json(rs: Seq[(String, Double)]): String =
-      rs.map { case (k, v) => "\"" + k + f"""\":$v%.3f""" }.mkString("{", ",", "}")
-
-    // ---- fresh-JVM re-timer child: time the listed queries, print the
-    // marked JSON line, exit (no floors, no retries — the parent splices)
-    sys.env.get(RetimeEnv).map(_.trim).filter(_.nonEmpty) match {
-      case Some(list) =>
-        val rs = time(list.split(",").toSeq.map(_.trim).filter(_.nonEmpty))
-        // alongside each timing, report the loadavg the child saw at the
-        // query's start so the parent can stamp the accepted sample's load
-        val withLoad = rs ++ rs.map { case (n, _) =>
-          (n + LoadKeySuffix) -> loadHist(n).last
+    // one sample; a query that failed once is not run again
+    def run(name: String): Option[Double] =
+      if (failed.contains(name)) None
+      else {
+        spark.catalog.clearCache()
+        val t0 = System.nanoTime()
+        try {
+          val fn = queries.getOrElse(name,
+            throw new IllegalArgumentException(s"unknown query $name"))
+          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+          Some((System.nanoTime() - t0) / 1e9)
+        } catch {
+          case NonFatal(e) =>
+            e.printStackTrace()
+            failed(name) = e.toString.linesIterator.nextOption().getOrElse("")
+            None
         }
-        println(RetimeMarker + json(withLoad))
-        spark.stop()
-        return
-      case None => ()
-    }
-
-    val priorFloors = loadFloors()
-    def floorOf(name: String): Option[Double] = priorFloors.get(s"$sfKey/$name")
-
-    // headline = scale-path queries; the deliberately-quadratic exactness
-    // baselines (d05/s01) are timed too but labeled separately so the
-    // headline number reflects the algorithms meant to run at 100 TB.
-    val firstPass = time(SparkEntry.benchQueries)
-    val firstTotal = firstPass.map(_._2).filter(_ >= 0).sum
-    val med = {
-      val ok = firstPass.map(_._2).filter(_ >= 0).sorted
-      if (ok.isEmpty) 0.0 else ok(ok.length / 2)
-    }
-    // floor-relative trigger: fire on ANY sample > 2.5x its persisted
-    // floor (r8 verdict: s02's 4.85s vs a 1.05 floor slipped under the
-    // old 5s absolute gate). The +1s excess guard keeps sub-second
-    // jitter (0.2s floor, 0.6s sample) from burning retry rounds.
-    // r10 verdict: an absolute-excess OR-term — 1.75x floor AND 1.5s of
-    // excess — catches the mid-band escape (s07's 3.67s over a 1.51s
-    // floor was 2.42x: under the 2.5x ratio gate, but +2.16s of real
-    // excess), so contended samples re-time instead of landing in a
-    // clean:true window.
-    def overFloor(name: String, v: Double): Boolean =
-      floorOf(name).exists(fl => overFloorBand(fl, v))
-    def isOutlier(name: String, v: Double): Boolean =
-      v > math.max(5.0, 3 * med) || overFloor(name, v)
-    // up to TWO retry rounds, each behind its own cooldown, re-timing
-    // only queries whose best-so-far is still outlier-shaped: this host's
-    // stall windows can outlive one cooldown (observed: first retry of a
-    // 7s query still at 280s), and a second widely-spaced sample is the
-    // difference between a believable artifact and a poisoned gate
-    val samples = scala.collection.mutable.LinkedHashMap[String, Vector[Double]]()
-    firstPass.foreach { case (n, v) => samples(n) = Vector(v) }
-    // per-query (value, load) pairs — samples(n) and loadHist(n) stay
-    // parallel: time() appends the load before each run, callers append
-    // the value after; the fresh-JVM splice appends both together
-    def samplePairs(n: String): Vector[(Double, Double)] =
-      samples.getOrElse(n, Vector.empty)
-        .zip(loadHist.getOrElse(n, Vector.empty)).filter(_._1 >= 0)
-    // load-gated ACCEPTANCE (r19 verdict item 1: the official r19 window
-    // accepted 34 of 47 samples above the quiet gate because the floor
-    // band was the only acceptance rule — a contended sample inside the
-    // band sailed through). A sample taken above the quiet gate cannot
-    // be accepted while it is the query's ONLY sample; once a quiet
-    // sample exists, acceptance is min over the QUIET pool, so the
-    // stamped query_load of every accepted sample in a clean window is
-    // <= the gate. When no quiet sample survives every retry tier the
-    // loaded min is reported but the query taints the clean verdict.
-    def hasQuietSample(n: String): Boolean =
-      samplePairs(n).exists { case (_, l) => l >= 0 && l <= quietLoad }
-    def acceptedOf(n: String): (Double, Double) =
-      acceptedSample(samplePairs(n), quietLoad)
-    def stillPending(n: String): Boolean = {
-      val v = acceptedOf(n)._1
-      v >= 0 && (isOutlier(n, v) || !hasQuietSample(n))
-    }
-    // queries re-timed ONLY because their single sample was loaded —
-    // the count the artifact stamps as load_forced_retimes
-    val loadForced = firstPass.collect {
-      case (n, v) if v >= 0 && !hasQuietSample(n) && !isOutlier(n, v) => n
-    }
-    if (loadForced.nonEmpty)
-      System.err.println(s"[bench] ${loadForced.size} in-band sample(s) " +
-        s"taken above loadavg $quietLoad forced to re-time: " +
-        loadForced.mkString(","))
-    var pending = firstPass.collect {
-      case (n, v) if v >= 0 && stillPending(n) => n
-    }
-    var round = 0
-    while (pending.nonEmpty && round < 2) {
-      System.err.println(s"[bench] ${pending.size} outlier/loaded " +
-        s"sample(s); cooling down ${cooldownSec}s before re-timing " +
-        s"(round ${round + 1})")
-      System.gc()
-      Thread.sleep(cooldownSec * 1000L)
-      gateOnQuietHost(s"retry round ${round + 1}")
-      pending.foreach { n =>
-        val v2 = time(Seq(n)).head._2
-        samples(n) = samples(n) :+ v2
       }
-      pending = pending.filter(stillPending)
-      round += 1
-    }
-    // still outlier-shaped after two in-window retries: the stall mode is
-    // process-window-shaped, so re-time those queries ONCE in a fresh JVM
-    // and splice the better sample (r4 verdict, Next-round item 1).
-    // SPARK_GRAFT_FORCE_FRESH forces names through this path regardless of
-    // outlier status — the test hook that proves the fork+splice works
-    // without waiting for a real stall.
-    val forced = sys.env.get("SPARK_GRAFT_FORCE_FRESH").toSeq
-      .flatMap(_.split(",")).map(_.trim).filter(samples.contains)
-    pending = (pending ++ forced).distinct
-    if (pending.nonEmpty) {
-      System.err.println(s"[bench] ${pending.size} outlier(s) survive in-window " +
-        s"retries; re-timing in a fresh JVM: ${pending.mkString(",")}")
-      gateOnQuietHost("fresh-JVM re-time")
-      val lineageEma = selfEma.value +
-        parentEma0 * math.exp(-(System.nanoTime() - jvmStartNs) / 1e9 / 60.0)
-      val raw = retimeFreshJvm(pending, lineageEma)
-      // the child reports <name>__load alongside each timing — split the
-      // stamp entries out before treating anything as a timing
-      val (loadEntries, fresh) = raw.partition(_._1.endsWith(LoadKeySuffix))
-      val freshLoad = loadEntries.map { case (k, v) =>
-        k.stripSuffix(LoadKeySuffix) -> v
-      }
-      fresh.foreach { case (n, v) =>
-        samples(n) = samples.getOrElse(n, Vector.empty) :+ v
-        // keep the load vector parallel so acceptedOf sees the child's
-        // stamp (-1 = a child predating the stamp: counts as loaded)
-        loadHist(n) = loadHist.getOrElse(n, Vector.empty) :+
-          freshLoad.getOrElse(n, -1.0)
-      }
-      // queries STILL outlier-shaped (or still without a quiet-host
-      // sample) here feed the suspect/clean verdict below — on a
-      // floor-less first run at a new sf dir, the median rule is the
-      // only stall detector, so it must reach the flag
-      pending = pending.filter(stillPending)
-    }
-    val unresolved = pending
-    val retried: Map[String, Vector[Double]] =
-      samples.filter(_._2.length > 1).toMap
-    val results = firstPass.map { case (name, _) => name -> acceptedOf(name)._1 }
-    val bestLoad = firstPass.map { case (name, _) =>
-      name -> acceptedOf(name)._2 }.toMap
-    // baselines get the same single-sample load rule: one gated re-time
-    // when the only sample was taken above the quiet gate
-    val baselinesFirst = time(SparkEntry.baselineQueries)
-    baselinesFirst.foreach { case (n, v) => samples(n) = Vector(v) }
-    val loadedBaselines = baselinesFirst.collect {
-      case (n, v) if v >= 0 && !hasQuietSample(n) => n
-    }
-    if (loadedBaselines.nonEmpty) {
-      gateOnQuietHost("baseline re-time")
-      loadedBaselines.foreach { n =>
-        samples(n) = samples(n) :+ time(Seq(n)).head._2
-      }
-    }
-    val baselines = baselinesFirst.map { case (n, _) => n -> acceptedOf(n)._1 }
-    val loadEnd = loadAvg
-    val cores = Runtime.getRuntime.availableProcessors()
 
-    // tighten persisted floors with this run's measurements (all queries)
-    val measured = (results ++ baselines).filter(_._2 >= 0)
-    val newFloors = measured.foldLeft(priorFloors) { case (acc, (name, v)) =>
-      val k = s"$sfKey/$name"
-      acc.updated(k, acc.get(k).fold(v)(math.min(_, v)))
+    names.foreach(run)
+    for (rep <- 1 to Reps; name <- names; t <- run(name)) {
+      samples(name) :+= t
+      System.err.println(f"[bench] rep $rep $name $t%.3fs")
     }
-    try saveFloors(newFloors)
-    catch { case e: Exception =>
-      System.err.println(s"[bench] could not persist floors: ${e.getMessage}") }
 
-    // in-band pollution marking: the driver's gate must see a believable
-    // number or an explicit suspect flag, never silently-garbage timings
-    val loadSuspect = math.min(loadStart, loadEnd) > cores * 1.5
-    // same floor rules as the retry trigger (1.75x+1.5s OR 2x+0.3s), so a
-    // window only reports clean:true when every accepted sample is within
-    // the band its own retry trigger enforces
-    val slowVsFloor = results.filter { case (name, v) =>
-      v >= 0 && overFloor(name, v)
-    }.map(_._1)
-    val failedNames = (results ++ baselines).filter(_._2 < 0).map(_._1)
-    // a query whose EVERY sample (all retry tiers included) was taken
-    // above the quiet gate reports its loaded min but cannot vouch for
-    // it — the r19 verdict's acceptance hole, now a clean-verdict taint
-    val noQuietSample = (results ++ baselines).collect {
-      case (n, v) if v >= 0 && !hasQuietSample(n) => n
-    }
-    // polluted = any of: a final timing >2.5x its persisted floor; a
-    // FLOOR-LESS query still outlier-shaped after every retry tier (on a
-    // first run at a new sf dir the median rule is the only stall
-    // signal — a floored query legitimately slower than the median is
-    // vouched for by its own floor instead); a query with no quiet-host
-    // sample; or a failed query
-    val polluted =
-      (slowVsFloor ++ unresolved.filter(n => floorOf(n).isEmpty) ++
-        noQuietSample).distinct
-    val suspect = loadSuspect || polluted.nonEmpty || failedNames.nonEmpty
-    val reasons =
-      (if (loadSuspect) Seq(f"loadavg ${math.min(loadStart, loadEnd)}%.1f > ${cores * 1.5}%.1f") else Nil) ++
-        slowVsFloor.map(n => s"$n over floor band") ++
-        unresolved.filter(n => floorOf(n).isEmpty)
-          .filterNot(slowVsFloor.contains)
-          .map(n => s"$n floorless outlier after all retries") ++
-        noQuietSample.map(n => f"$n accepted above loadavg $quietLoad%.1f") ++
-        failedNames.map(n => s"$n failed")
-
-    val failed = (results ++ baselines).filter(_._2 < 0).map(r => "\"" + r._1 + "\"")
-      .mkString("[", ",", "]")
-    // best-known-clean numbers IN the artifact: when this run's window is
-    // polluted, the floors are the auditable isolated-run truth (each one
-    // is a real min-across-runs measurement from BENCH_floor.json). A
-    // query that FAILED this run stays excluded (-1) even if a prior-run
-    // floor exists — a historical floor must not dress up missing
-    // coverage as a measurement.
-    val floorResults = results.map { case (name, v) =>
-      name -> (if (v >= 0) floorOf(name).fold(v)(math.min(v, _)) else -1.0)
-    }
-    val floorTotal = floorResults.map(_._2).filter(_ >= 0).sum
-    val windowTotal = results.map(_._2).filter(_ >= 0).sum
-    // headline: the measured best-of when believable; when pollution
-    // survived even the fresh-JVM re-time (vs floors OR the median rule
-    // on floor-less runs), fall back to floor_total — every entry a real
-    // measured min from THIS run or a prior one — and say so via
-    // clean:false, so a polluted window is never the gate's number
-    val clean = polluted.isEmpty && failedNames.isEmpty
-    val total = if (clean) windowTotal else floorTotal
-    val baseTotal = baselines.map(_._2).filter(_ >= 0).sum
-    val retriedJson = retried.map { case (k, vs) =>
-      "\"" + k + "\":" + vs.map(v => f"$v%.3f").mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
-    val reasonsJson = reasons.map("\"" + _ + "\"").mkString("[", ",", "]")
-    // per-query loadavg at the ACCEPTED sample's start; in a clean
-    // window every stamp is <= the quiet gate by construction of
-    // acceptedOf. -1 = unknown (a query that never ran)
-    val loadStampJson = json(
-      results.map { case (n, _) => n -> bestLoad.getOrElse(n, -1.0) } ++
-        baselines.map { case (n, _) => n -> acceptedOf(n)._2 })
-
-    // Full diagnostics go to a sidecar file (and an early, prefixed log
-    // line); the FINAL stdout line must stay compact because the driver
-    // captures only the tail of the process output — a final line longer
-    // than that window truncates mid-JSON and parses as nothing (r5's
-    // artifact had parsed:null for exactly this reason).
-    // ADVICE r7: a floor-spliced total that excludes failed queries reads
-    // as a speedup across rounds; when ANY headline query failed the
-    // headline value is meaningless — emit null so consumers cannot
-    // compare it, and keep floor_total/queries for diagnostics.
-    val valueJson =
-      if (failedNames.nonEmpty) "null" else f"$total%.3f"
-    val detail = f"""{"metric":"total","value":$valueJson,"unit":"sec","clean":$clean,"first_pass_total":$firstTotal%.3f,"window_total":$windowTotal%.3f,"floor_total":$floorTotal%.3f,"suspect":$suspect,"suspect_reasons":$reasonsJson,"queries":${json(results)},"query_floors":${json(floorResults)},"baseline_queries":${json(baselines)},"baseline_total":$baseTotal%.3f,"retried":$retriedJson,"failed":$failed,"loadavg":{"start":$loadStart%.2f,"end":$loadEnd%.2f},"query_load":$loadStampJson,"query_load_kind":"external (raw loadavg minus this JVM's own smoothed CPU)","quiet_gate":$quietLoad%.1f,"load_forced_retimes":${loadForced.length},"quiet_wait_sec":$quietWaitSec%.0f,"sf":"$sfDir"}"""
-    // a master-overridden run (the local-cluster smoke) must not
-    // clobber the canonical local[N] window the repo persists
-    val detailFile = if (sys.env.contains("SPARK_GRAFT_MASTER"))
-      "BENCH_DETAIL_master_override.json" else "BENCH_DETAIL.json"
-    try java.nio.file.Files.write(
-      java.nio.file.Paths.get(detailFile), detail.getBytes("UTF-8"))
-    catch { case e: Exception =>
-      System.err.println(s"[bench] could not write $detailFile: ${e.getMessage}") }
-    System.err.println(s"[bench] detail: $detail")
-
-    println(compactFinalLine(total, clean, suspect, floorTotal, baseTotal,
-      failedNames, results, sfDir, loadStart, loadEnd))
+    val host = JObject(
+      "cores" -> JInt(Runtime.getRuntime.availableProcessors()),
+      "master" -> JString(master),
+      "shuffle_partitions" -> JInt(shuffleParts.toInt),
+      "sf" -> JString(sfDir))
+    println(resultLine(names.filterNot(failed.contains).map(n => n -> samples(n)),
+      failed.toSeq, host))
     spark.stop()
   }
 
-  /** The driver-facing final stdout line. MUST stay under the driver's
-    * tail-capture budget (observed 2000 chars, minus sbt's trailing
-    * success line) or it truncates mid-JSON and parses as nothing —
-    * r5's artifact was lost exactly that way. Degradation ladder when
-    * over budget: keep only the 20 slowest query entries; then drop the
-    * query map entirely. The failed list is always capped (first 5 names
-    * + a count) — a systemic failure run lists every query and would
-    * otherwise blow the window on its own. */
-  private[graft] def compactFinalLine(total: Double, clean: Boolean,
-      suspect: Boolean, floorTotal: Double, baseTotal: Double,
-      failedNames: Seq[String], results: Seq[(String, Double)],
-      sfDir: String, loadStart: Double = -1.0, loadEnd: Double = -1.0): String = {
-    def compactJson(rs: Seq[(String, Double)]): String =
-      rs.map { case (k, v) => "\"" + k + f"""\":$v%.2f""" }.mkString("{", ",", "}")
-    val failed = {
-      val shown = failedNames.take(5).map("\"" + _ + "\"")
-      val more =
-        if (failedNames.length > 5)
-          Seq("\"...+" + (failedNames.length - 5) + " more\"")
-        else Nil
-      (shown ++ more).mkString("[", ",", "]")
+  /** The final stdout line: per-query median/min/max over `samples` (in
+    * seconds, rounded to ms) and `value`, the sum of the medians — null
+    * when any query failed. */
+  private[graft] def resultLine(samples: Seq[(String, Seq[Double])],
+      failed: Seq[(String, String)], host: JObject): String = {
+    def r3(x: Double): Double = math.rint(x * 1000) / 1000
+    val stats = samples.map { case (n, xs) =>
+      val s = xs.sorted
+      n -> (r3(s(s.size / 2)), r3(s.head), r3(s.last))
     }
-    // value is null when any headline query failed — a partial total
-    // excludes the failures and would read as a cross-round speedup
-    val valueJson =
-      if (failedNames.nonEmpty) "null" else f"$total%.3f"
-    def line(qs: String, truncated: Boolean): String = {
-      val trunc = if (truncated) ""","queries_truncated":true""" else ""
-      f"""{"metric":"total","value":$valueJson,"unit":"sec","clean":$clean,"suspect":$suspect,"floor_total":$floorTotal%.3f,"baseline_total":$baseTotal%.3f,"failed":$failed,"n_failed":${failedNames.length},"loadavg":[$loadStart%.1f,$loadEnd%.1f],"queries":$qs$trunc,"sf":"$sfDir"}"""
-    }
-    val full = line(compactJson(results), truncated = false)
-    if (full.length <= 1600) full
-    else {
-      val top = line(compactJson(results.sortBy(-_._2).take(20)), truncated = true)
-      if (top.length <= 1600) top else line("{}", truncated = true)
-    }
+    compact(render(JObject(
+      "metric" -> JString("total"),
+      "value" -> (if (failed.isEmpty) JDouble(r3(stats.map(_._2._1).sum)) else JNull),
+      "unit" -> JString("s"),
+      "reps" -> JInt(Reps),
+      "queries" -> JObject(stats.map { case (n, (med, lo, hi)) =>
+        n -> JObject("median" -> JDouble(med), "min" -> JDouble(lo),
+          "max" -> JDouble(hi))
+      }.toList),
+      "failed" -> JObject(failed.toList.map { case (n, m) => n -> JString(m) }),
+      "host" -> host)))
   }
 }

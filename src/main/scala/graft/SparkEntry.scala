@@ -36,11 +36,9 @@ object SparkEntry {
   def oracleSql: Map[String, String] =
     registry.flatMap(q => q.oracle.map(o => q.name -> o.stripMargin.trim)).toMap
 
-  /** Headline benchmark subset (Bench.scala) — scale-path queries only. */
+  /** Headline benchmark set: the queries `graft.Bench` times when given
+    * no names — scale-path queries only; exactness baselines are left
+    * out (see [[QueryDef]]). */
   def benchQueries: Seq[String] =
     registry.filter(q => q.bench && !q.baseline).map(_.name)
-
-  /** Labeled exactness baselines: timed by Bench, reported separately. */
-  def baselineQueries: Seq[String] =
-    registry.filter(q => q.bench && q.baseline).map(_.name)
 }

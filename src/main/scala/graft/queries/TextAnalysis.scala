@@ -376,6 +376,10 @@ object TextAnalysis {
     // 0.63-0.72 s), output bit-identical (exceptAll both ways = 0; the
     // oracle replays the grouping form). At 100 TB the removed exchanges
     // are the whole token stream.
+    //
+    // INVARIANT: `Tables.corpus` `doc_id` is unique. The fold computes
+    // one row per input row, which equals the grouping form's one row
+    // per doc_id only while no doc_id repeats (PlanAuditSuite pins it).
     QueryDef(
       "t09_repetition",
       (s, d) => {
@@ -405,8 +409,9 @@ object TextAnalysis {
             (fld(a, "dup") +
               when(fld(a, "run") >= 2L, fld(a, "run")).otherwise(0L)).as("dup_c")))
         Tables.corpus(s, d)
-          // explode() dropped null-text docs; the projection form must too
-          .where(toks.isNotNull)
+          // explode() dropped null-text docs; the projection form must
+          // too (the split is null exactly when the text is)
+          .where(col("text").isNotNull)
           .select(col("doc_id"),
             size(toks).cast("long").as("n_tokens"), folded.as("__f"))
           .select(col("doc_id"), col("n_tokens"),

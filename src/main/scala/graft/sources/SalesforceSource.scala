@@ -61,11 +61,24 @@ class SalesforceSource extends TableProvider with DataSourceRegister {
       }
   }
 
+  /** A write's table is the caller's own columns (`df.schema`), not the
+    * inferred full schema: resolving by name against the full schema
+    * would hand the writer a null for every column the caller left out,
+    * and an update or upsert would then null those fields org-side.
+    * Reads without a user schema still get [[inferSchema]]'s. */
+  override def supportsExternalMetadata(): Boolean = true
+
+  /** Each column the org declares takes the org's name and type, so a
+    * write keeps Spark's by-name, store-assignment casts. */
   override def getTable(
       schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table = {
     val opts = new CaseInsensitiveStringMap(properties)
-    new OrgTable(opts.get("org"), opts.get("sObject"), schema)
+    val declared = org(opts).describe(opts.get("sObject"))
+    val typed = StructType(schema.fields.map(f =>
+      declared.fields.find(_.name.equalsIgnoreCase(f.name))
+        .fold(f)(_.copy(nullable = f.nullable))))
+    new OrgTable(opts.get("org"), opts.get("sObject"), typed)
   }
 }
 

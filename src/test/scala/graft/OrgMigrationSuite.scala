@@ -72,6 +72,12 @@ class OrgMigrationSuite extends SparkSuite {
     assert(srcRows("A1") == null, "unmigrated row must stay untouched")
     assert(srcRows("A2") == byOldId("A2").getString(0))
     assert(srcRows("A3") == byOldId("A3").getString(0))
+    // the write-back carries only Id and New_Id__c: the migrated rows
+    // keep every other field
+    val srcFull = srcOrg.rows("Account")
+      .map(r => r.getString(0) -> (r.getString(1), r.get(2))).toMap
+    assert(srcFull("A2") == (("big", 500.0)), srcFull)
+    assert(srcFull("A3") == (("huge", 900.0)), srcFull)
 
     // the extraction pushed its WHERE into generated SOQL
     assert(srcOrg.statements.exists(_.contains("Amount >= 100")),
@@ -102,8 +108,10 @@ class OrgMigrationSuite extends SparkSuite {
     assert(n == 1)
     val out = graft.sources.OrgWriteMetrics.lastCommit("updm", "Account")
     assert(out.processed == 1 && out.failed == 1, out)
-    val byId = org.rows("Account").map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(byId("A1") == "renamed" && byId("A2") == "two")
+    val byId = org.rows("Account").map(r => r.getString(0) -> r).toMap
+    assert(byId("A1").getString(1) == "renamed" && byId("A2").getString(1) == "two")
+    // a column the update rows do not carry is left as it was
+    assert(byId("A1").get(2) == 1.0, byId("A1"))
   }
 
   test("connector upsert inserts new keys and updates existing ones") {
@@ -124,6 +132,15 @@ class OrgMigrationSuite extends SparkSuite {
     assert(byKey("K1") == ("one-v2", 10.0)) // updated in place
     assert(byKey("K2") == ("two", 2.0))     // untouched
     assert(byKey("K3") == ("three", 3.0))   // inserted
+
+    // partial columns: only Amount changes, Name is kept; the Int amount
+    // is cast to the org's Double
+    val amounts = Seq(("K2", 20)).toDF("New_Id__c", "Amount")
+    val out2 = new ConnectorTableIO(spark, "upsm")
+      .upsert("Account", amounts, "New_Id__c")
+    assert(out2.processed == 1 && out2.failed == 0, out2)
+    val k2 = org.rows("Account").find(_.getString(3) == "K2").get
+    assert(k2.getString(1) == "two" && k2.getDouble(2) == 20.0, k2)
   }
 
   test("upsert is idempotent — the safe sink under Spark task retries") {

@@ -253,6 +253,11 @@ class PlanAuditSuite extends SparkSuite {
       "t09 must not shuffle token rows:\n" + p)
     assert(!p.contains("CartesianProduct"), p)
     assert(!p.contains("BatchEvalPython"), p)
+    // the per-row fold equals the per-doc grouping only while doc_id is
+    // unique in the corpus
+    val docs = Tables.corpus(spark, sf)
+    assert(docs.select("doc_id").distinct().count() == docs.count(),
+      "t09's per-row fold needs a unique doc_id")
   }
 
   test("c11/c15: part filter prunes first; all dims broadcast") {
