@@ -262,47 +262,32 @@ object ScaleOps {
       .drop("__pid", "__off")
   }
 
-  /** PageRank in integer micro-units — graph centrality with NO float
-    * anywhere: ranks start at `scale/|V|`, each iteration a node gets
-    * `(scale*(100-dampNum)/100)/|V| + (dampNum * Σ in-contribs) div 100`
-    * where a contribution is `rank div out-degree`. Every op is integer
-    * multiply/divide/sum, so the fixpoint trajectory is bit-identical on
-    * any engine and any partitioning — the same stance as the t12/p11
-    * fixed-point aggregates, applied to an ITERATIVE computation.
-    * (Truncation leaks a little mass per step; ranking is what matters.)
-    *
-    * Scale shape: the iteration runs over the EDGE-INCIDENT subgraph
-    * only (the d06 move) — a vertex touching no edge is `base +
-    * dampNum·0` from round 1 onward, so the non-incident majority of a
-    * lightly-connected corpus joins back ONCE at the end with the
-    * constant base rank, and per-round cost tracks |edges|, not |V|.
-    * Per round: ONE edge⋈rank join (keyed on src), one
-    * map-side-combinable sum keyed on dst, one left join to the incident
-    * vertex set. The driver sees only |V| (one count) — never data.
-    * Lineage is cut per round with an eager localCheckpoint, so `iters`
-    * can grow without plan blowup. Dangling nodes keep the base rank;
-    * departed mass is dropped, matching the documented truncation
-    * stance. */
   /** Connected components via alternating LARGE-STAR / SMALL-STAR
     * rounds (Kiveris et al., "Connected Components in MapReduce and
-    * Beyond", 2014) — the O(log n)-round formulation. Label propagation
-    * ([[graft.functions.TextOps.duplicateClusters]]'s distributed loop)
-    * converges in O(diameter) rounds: fine for the plump near-dup
+    * Beyond", 2014) — the O(log n)-round formulation. Min-label
+    * propagation needs O(diameter) rounds: fine for the plump near-dup
     * clusters dedup produces, pathological on chain-shaped components
     * (citation threads, quote chains). The star rounds double the
     * "pointer-jumping" reach each iteration, so a 10k-long chain
-    * converges in ~log² n rounds instead of 10k.
+    * converges in ~log² n rounds instead of 10k. This is
+    * [[TextOps.duplicateClusters]]'s branch for edge sets too large for
+    * the driver or ids that are not long; d17 runs it directly against
+    * the d06 oracle.
     *
     * Per round: two grouped min-aggregations (map-side partials — the
     * hot component min collapses per task) + the emit joins, lineage
     * cut by eager localCheckpoint; the driver sees only the edge-set
     * checksum (count + hash sum), never data. Output = (idCol,
-    * cluster_id = component min), identical to the propagation
-    * fixpoint — pinned against [[TextOps.duplicateClusters]] and the
-    * d06 oracle. */
+    * cluster_id = component min). A graph that has not converged after
+    * 64 rounds fails the `require` instead of returning partial labels.
+    *
+    * Executor loss: a `localCheckpoint(true)` block lives only on the
+    * executor that computed it and has no lineage to recompute from, so
+    * losing that executor after a round fails the query (Spark reports
+    * the checkpointed RDD's missing blocks) — it never returns a wrong
+    * answer. The recovery is to rerun the query. */
   def connectedComponentsStar(vertices: DataFrame, idCol: String,
-      pairs: DataFrame, aCol: String, bCol: String,
-      maxIters: Int = 64): DataFrame = {
+      pairs: DataFrame, aCol: String, bCol: String): DataFrame = {
     def canon(e: DataFrame): DataFrame = e
       .select(greatest(col("__cu"), col("__cv")).as("__cu"),
         least(col("__cu"), col("__cv")).as("__cv"))
@@ -320,7 +305,7 @@ object ScaleOps {
     var cs = checksum(e)
     var done = cs._1 == 0L
     var it = 0
-    while (!done && it < maxIters) {
+    while (!done && it < StarMaxRounds) {
       // large-star over the symmetric neighbor view: every neighbor v
       // strictly above u re-attaches to m = min(Γ(u) ∪ {u})
       val s = e.unionByName(
@@ -343,7 +328,7 @@ object ScaleOps {
       cs = ncs
       it += 1
     }
-    require(done, s"star CC did not converge in $maxIters rounds")
+    require(done, s"star CC did not converge in $StarMaxRounds rounds")
     // converged state is a star per component: (non-min -> min) edges
     val parent = e.groupBy("__cu").agg(min(col("__cv")).as("cluster_id"))
       .withColumnRenamed("__cu", "__pid")
@@ -353,6 +338,30 @@ object ScaleOps {
         coalesce(col("cluster_id"), col(idCol)).as("cluster_id"))
   }
 
+  /** Round budget of [[connectedComponentsStar]]. */
+  private val StarMaxRounds = 64
+
+  /** PageRank in integer micro-units — graph centrality with NO float
+    * anywhere: ranks start at `scale/|V|`, each iteration a node gets
+    * `(scale*(100-dampNum)/100)/|V| + (dampNum * Σ in-contribs) div 100`
+    * where a contribution is `rank div out-degree`. Every op is integer
+    * multiply/divide/sum, so the fixpoint trajectory is bit-identical on
+    * any engine and any partitioning — the same stance as the t12/p11
+    * fixed-point aggregates, applied to an ITERATIVE computation.
+    * (Truncation leaks a little mass per step; ranking is what matters.)
+    *
+    * Scale shape: the iteration runs over the EDGE-INCIDENT subgraph
+    * only (the d06 move) — a vertex touching no edge is `base +
+    * dampNum·0` from round 1 onward, so the non-incident majority of a
+    * lightly-connected corpus joins back ONCE at the end with the
+    * constant base rank, and per-round cost tracks |edges|, not |V|.
+    * Per round: ONE edge⋈rank join (keyed on src), one
+    * map-side-combinable sum keyed on dst, one left join to the incident
+    * vertex set. The driver sees only |V| (one count) — never data.
+    * Lineage is cut per round with an eager localCheckpoint, so `iters`
+    * can grow without plan blowup. Dangling nodes keep the base rank;
+    * departed mass is dropped, matching the documented truncation
+    * stance. */
   def integerPageRank(vertices: DataFrame, idCol: String,
       edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int, scale: Long = 1000000L, dampNum: Long = 85L,

@@ -2511,142 +2511,81 @@ object TextOps {
               bc, numHashes))
           .cast("long").as("n_hit"))
 
-  /** Connected components over a near-duplicate pair graph via min-label
-    * propagation: every document's cluster id is the minimum doc id
-    * reachable through dup edges — the canonical-representative
-    * assignment a dedup pipeline needs after pair generation (keep
-    * `doc_id == cluster_id`, drop the rest).
+  /** Connected components over a near-duplicate pair graph: every
+    * document's cluster id is the minimum doc id reachable through dup
+    * edges — the canonical-representative assignment a dedup pipeline
+    * needs after pair generation (keep `doc_id == cluster_id`, drop the
+    * rest). A doc with no dup edge is its own cluster.
     *
-    * Iterative DataFrame algorithm: each round propagates labels across
-    * edges and keeps the per-node min; rounds needed = component
-    * diameter (near-dup clusters are small — planted clusters converge
-    * in 2-3). Every shuffle keys on uniformly distributed ids; the
-    * driver loop only reads convergence counts, never data.
-    *
-    * Only EDGE-INCIDENT vertices iterate: a doc with no dup edge can
-    * never receive a foreign label, so the loop runs over the pair
-    * subgraph (at corpus scale, orders of magnitude smaller than the
-    * corpus) and the full document set joins back once at the end —
-    * iteration cost tracks |dup graph|, not |corpus|.
-    *
-    * Small-graph fast path (the GraphX/GraphFrames move): when the edge
-    * set fits comfortably on the driver (`smallEdgeLimit`, default 1M
-    * pairs = 16 MB of longs), union-find with path compression replaces
-    * the iterative loop entirely — one collect, zero per-round Spark
-    * jobs, identical min-label fixpoint. Even on a 1000-executor
-    * cluster, scheduling `diameter x 3` stages over a few thousand rows
-    * costs more than the driver's O(E alpha(E)) — the distributed loop
-    * exists for the web-scale dup graphs that genuinely exceed the
-    * bound, and engages automatically above it. */
-  def duplicateClusters(docs: DataFrame, idCol: String, pairs: DataFrame,
-      maxIters: Int = 20, smallEdgeLimit: Long = 1000000L): DataFrame = {
-    // cache the (possibly expensive-to-produce) pair stream ONCE, then
-    // derive both edge directions from the cache — the naive
-    // `pairs ∪ pairs.reversed` union evaluates the upstream pair
-    // generator twice
+    * Two branches, one min-label fixpoint:
+    *  - driver-small edge sets (at most 1M pairs = 16 MB of longs) whose
+    *    ids are all long: union-find with path compression on the driver
+    *    (the GraphX/GraphFrames small-graph move) — one collect, zero
+    *    per-round Spark jobs. Scheduling even a few stages per round over
+    *    a few thousand rows costs more than the driver's O(E alpha(E)).
+    *  - everything else: [[ScaleOps.connectedComponentsStar]]'s
+    *    large-star/small-star rounds, O(log n) rounds whatever the
+    *    component diameter. A graph that does not converge within the
+    *    star rounds' budget fails with their `require` error rather than
+    *    returning non-minimal ids. */
+  def duplicateClusters(docs: DataFrame, idCol: String,
+      pairs: DataFrame): DataFrame = {
+    // cache the (possibly expensive-to-produce) pair stream ONCE: the
+    // edge count and either branch's single read of the edges share it
     val base = pairs
       .select(col("id_a").as("__src"), col("id_b").as("__dst")).cache()
-    val edgeCount = base.count()
-    // fast path only when BOTH the pair ids and the docs id column are
-    // long (the corpus contract): any other id type takes the fully
-    // distributed loop unchanged — the fast path's output id column
-    // comes back as long, and a silent cast would change the schema (or
-    // null out string ids) depending on nothing but the edge count
-    val idsAreLong = base.schema.fields.forall(
-      _.dataType == org.apache.spark.sql.types.LongType) &&
-      docs.schema(idCol).dataType == org.apache.spark.sql.types.LongType
-    if (edgeCount <= smallEdgeLimit && idsAreLong) {
-      val spark = docs.sparkSession
-      import spark.implicits._
-      val es = base.as[(Long, Long)].collect()
-      base.unpersist()
-      // union-find, path-compressed; roots resolve to the component MIN
-      // id afterwards so the result equals the propagation fixpoint
-      val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-        var c = x
-        while (parent.getOrElse(c, c) != c) {
-          val nxt = parent.getOrElse(c, c); parent(c) = r; c = nxt
+    try {
+      val edgeCount = base.count()
+      // fast path only when BOTH the pair ids and the docs id column are
+      // long (the corpus contract): any other id type takes the star
+      // rounds — the fast path's output id column comes back as long,
+      // and a silent cast would change the schema (or null out string
+      // ids) depending on nothing but the edge count
+      val idsAreLong = base.schema.fields.forall(
+        _.dataType == org.apache.spark.sql.types.LongType) &&
+        docs.schema(idCol).dataType == org.apache.spark.sql.types.LongType
+      if (edgeCount <= SmallEdgeLimit && idsAreLong) {
+        val spark = docs.sparkSession
+        import spark.implicits._
+        val es = base.as[(Long, Long)].collect()
+        // union-find, path-compressed; roots resolve to the component MIN
+        // id afterwards so the result equals the min-label fixpoint
+        val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+        def find(x: Long): Long = {
+          var r = x
+          while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
+          var c = x
+          while (parent.getOrElse(c, c) != c) {
+            val nxt = parent.getOrElse(c, c); parent(c) = r; c = nxt
+          }
+          r
         }
-        r
+        es.foreach { case (a, b) =>
+          val ra = find(a); val rb = find(b)
+          if (ra != rb) parent(if (ra < rb) rb else ra) = math.min(ra, rb)
+        }
+        val verts = es.iterator.flatMap(e => Iterator(e._1, e._2)).toArray.distinct
+        val minOfRoot = scala.collection.mutable.HashMap.empty[Long, Long]
+        verts.foreach { v =>
+          val r = find(v)
+          minOfRoot(r) = math.min(minOfRoot.getOrElse(r, v), v)
+        }
+        val labels = verts.map(v => (v, minOfRoot(find(v)))).toSeq
+          .toDF("__v", "__lbl")
+        docs.select(col(idCol).cast("long").as("__v"))
+          .join(broadcast(labels), Seq("__v"), "left")
+          .select(col("__v").as(idCol),
+            coalesce(col("__lbl"), col("__v")).as("cluster_id"))
+      } else {
+        // the star rounds checkpoint the edges eagerly on entry, so the
+        // returned frame never reads `base` again
+        ScaleOps.connectedComponentsStar(docs, idCol, base, "__src", "__dst")
       }
-      es.foreach { case (a, b) =>
-        val ra = find(a); val rb = find(b)
-        if (ra != rb) parent(if (ra < rb) rb else ra) = math.min(ra, rb)
-      }
-      val verts = es.iterator.flatMap(e => Iterator(e._1, e._2)).toArray.distinct
-      val minOfRoot = scala.collection.mutable.HashMap.empty[Long, Long]
-      verts.foreach { v =>
-        val r = find(v)
-        minOfRoot(r) = math.min(minOfRoot.getOrElse(r, v), v)
-      }
-      val labels = verts.map(v => (v, minOfRoot(find(v)))).toSeq
-        .toDF("__v", "__lbl")
-      return docs.select(col(idCol).cast("long").as("__v"))
-        .join(broadcast(labels), Seq("__v"), "left")
-        .select(col("__v").as(idCol),
-          coalesce(col("__lbl"), col("__v")).as("cluster_id"))
-    }
-    val edges = base
-      .union(base.select(col("__dst").as("__src"), col("__src").as("__dst")))
-    // both directions are present, so base's two columns cover every
-    // incident vertex
-    var labels = base.select(col("__src").as("__v"))
-      .union(base.select(col("__dst").as("__v"))).distinct()
-      .select(col("__v"), col("__v").as("__lbl")).cache()
-    labels.count()
-    var prev: DataFrame = null
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIters) {
-      // one job per round: incoming neighbor labels pre-aggregate to a
-      // per-vertex min (map-side partial), the left join folds them into
-      // the current labels, and the `changed` count is the SAME action
-      // that populates the round's cache — no separate compare job. The
-      // label side is subgraph-sized, so AQE broadcasts both joins; the
-      // only exchange is the groupBy on uniformly distributed ids.
-      val prop = edges.join(labels, edges("__src") === labels("__v"))
-        .groupBy(col("__dst")).agg(min("__lbl").as("__plbl"))
-      val next = labels.join(prop, labels("__v") === prop("__dst"), "left")
-        .select(labels("__v"),
-          least(labels("__lbl"), coalesce(col("__plbl"), labels("__lbl")))
-            .as("__lbl"),
-          // null when no incoming label — filtered out by the where
-          (col("__plbl") < labels("__lbl")).as("__chg"))
-        .cache()
-      val changed = next.where(col("__chg")).count()
-      if (prev != null) prev.unpersist()
-      prev = labels
-      // keep the CACHED frame itself (unpersist is identity-based; a
-      // select() over it would make the later unpersist a no-op) — the
-      // stray __chg column is dropped at the end
-      labels = next
-      converged = changed == 0
-      iter += 1
-    }
-    if (prev != null) prev.unpersist()
-    base.unpersist()
-    if (!converged)
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"duplicateClusters: label propagation hit maxIters=$maxIters before " +
-          "converging — components wider than the iteration budget carry " +
-          "partially-propagated (non-minimal) cluster ids")
-    // cut the converged labels loose from the cache before returning: a
-    // localCheckpoint re-materializes the (already computed, subgraph-
-    // sized) labels into block storage owned by the result's lineage, so
-    // the loop's cache can be dropped NOW instead of leaking until the
-    // caller happens to evaluate the lazy join
-    val finalLabels = labels.localCheckpoint(true)
-    labels.unpersist()
-    // non-incident docs (the vast majority) are their own cluster; the
-    // converged subgraph labels are tiny, so AQE broadcasts
-    docs.select(col(idCol).as("__v"))
-      .join(finalLabels, Seq("__v"), "left")
-      .select(col("__v").as(idCol),
-        coalesce(col("__lbl"), col("__v")).as("cluster_id"))
+    } finally base.unpersist()
   }
+
+  /** Largest edge set [[duplicateClusters]] resolves on the driver. */
+  private val SmallEdgeLimit = 1000000L
 
   /** Winnowing document fingerprints (Schleimer/Wilkerson/Aiken, the
     * MOSS scheme): hash every character k-gram of the normalized text,

@@ -1096,7 +1096,7 @@ object PinnedMediaMath {
     * two derivatives share NO modality with each other, yet must
     * co-cluster THROUGH the base item — the property a per-modality
     * dedup cannot express. Scale shape: the sum of two banded joins
-    * plus label-propagation CC — cost tracks candidates per band,
+    * plus connected components — cost tracks candidates per band,
     * never items². The synthetic planes/captions are fixture plumbing,
     * not production operators — the production machinery is the hash
     * chain and the two banded joins — and because both engines derive

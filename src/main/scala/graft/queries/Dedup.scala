@@ -312,10 +312,10 @@ object Dedup {
     // the SQL-surface capability gate: a recursively generated day spine
     // (the canonical UNION ALL recursion — Spark 4.1 does not yet accept
     // UNION-distinct steps, so cyclic-graph closures stay with d06's
-    // label propagation) driving a gap-filled daily series, replayed by
-    // DuckDB's recursive CTE. Recursion depth = the DATE RANGE (30
-    // levels here), independent of the event count; the per-day
-    // aggregate underneath partially aggregates as usual.
+    // TextOps.duplicateClusters) driving a gap-filled daily series,
+    // replayed by DuckDB's recursive CTE. Recursion depth = the DATE
+    // RANGE (30 levels here), independent of the event count; the
+    // per-day aggregate underneath partially aggregates as usual.
     QueryDef(
       "q51_recursive_cte",
       (s, d) => {
@@ -466,8 +466,9 @@ object Dedup {
 
     // ---- d17: connected components via large-star/small-star rounds -------
     // d06's answer through the O(log n)-round star algorithm (Kiveris
-    // et al. 2014) instead of O(diameter) label propagation — the
-    // chain-robust CC for 100 TB graphs. Same oracle as d06: the
+    // et al. 2014) called directly, skipping duplicateClusters' driver
+    // union-find — the oracle gate for duplicateClusters' distributed
+    // branch, which is these same rounds. Same oracle as d06: the
     // recursive-CTE transitive closure.
     QueryDef(
       "d17_cc_star",

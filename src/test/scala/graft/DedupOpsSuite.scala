@@ -1010,18 +1010,26 @@ class DedupOpsSuite extends SparkSuite {
     }
     // sanity: the planted dups produce at least one non-trivial cluster
     assert(clusters.exists { case (id, c) => id != c })
-    // the small-graph union-find fast path and the distributed
-    // label-propagation loop must compute the identical fixpoint
-    val distributed = TextOps.duplicateClusters(docs, "doc_id", pairs,
-        smallEdgeLimit = 0L)
-      .as[(Long, Long)].collect().toMap
-    assert(distributed == clusters,
-      "fast path and distributed loop diverged")
-    // the O(log n)-round star algorithm computes the same fixpoint
+    // the O(log n)-round star algorithm (duplicateClusters' branch past
+    // the driver fast path) computes the same fixpoint
     val star = graft.functions.ScaleOps
       .connectedComponentsStar(docs, "doc_id", pairs, "id_a", "id_b")
       .as[(Long, Long)].collect().toMap
-    assert(star == clusters, "star CC diverged from label propagation")
+    assert(star == clusters, "star CC diverged from union-find")
+  }
+
+  test("duplicate clusters resolve a 64-vertex string-id chain to its min") {
+    // string ids take the distributed branch; the path n00-n01-...-n63
+    // has diameter 63, far wider than a near-dup cluster, and must still
+    // collapse to its minimum everywhere
+    val ids = (0 until 64).map(i => f"n$i%02d")
+    val verts = ids.toDF("doc_id")
+    val chain = ids.zip(ids.tail).toDF("id_a", "id_b")
+    val clusters = TextOps.duplicateClusters(verts, "doc_id", chain)
+      .as[(String, String)].collect().toMap
+    assert(clusters.keySet == ids.toSet, "every vertex must get a cluster")
+    val wrong = clusters.filter(_._2 != "n00")
+    assert(wrong.isEmpty, s"vertices not labelled n00: ${wrong.toSeq.sorted}")
   }
 
   test("star CC resolves a 4000-node chain (diameter >> round budget)") {
@@ -1072,16 +1080,16 @@ class DedupOpsSuite extends SparkSuite {
       s"expected post-filtering to under-fill somewhere: $global")
   }
 
-  test("distributed loop still matches the fast path at sf0.01 (gate scale)") {
-    // the correctness gate now exercises only the fast path (its edge
-    // sets are driver-small); this keeps the distributed loop honest at
-    // a scale ten times the unit corpus
+  test("star rounds match the union-find fast path at sf0.01 (gate scale)") {
+    // d06 at the gate takes only the fast path (its edge sets are
+    // driver-small); this keeps duplicateClusters' distributed branch,
+    // the star rounds, honest at a scale ten times the unit corpus
     val d01 = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
     val pairs = TextOps.ngramJaccardPairs(d01, "doc_id", "text", 3, 0.5).cache()
     val fast = TextOps.duplicateClusters(d01, "doc_id", pairs)
       .as[(Long, Long)].collect().toMap
-    val dist = TextOps.duplicateClusters(d01, "doc_id", pairs,
-        smallEdgeLimit = 0L)
+    val dist = graft.functions.ScaleOps
+      .connectedComponentsStar(d01, "doc_id", pairs, "id_a", "id_b")
       .as[(Long, Long)].collect().toMap
     pairs.unpersist()
     assert(fast == dist)

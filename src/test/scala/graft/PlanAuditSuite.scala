@@ -150,14 +150,15 @@ class PlanAuditSuite extends SparkSuite {
 
   test("d06: dup-cluster labels read through a materialization barrier") {
     val df = SparkEntry.queries("d06_dup_clusters")(spark, sf)
-    // the converged labels are handed off as an eager localCheckpoint
-    // (LogicalRDD): already-computed blocks, no lineage back into the
-    // iteration — the closing corpus join can never recompute the loop
+    // past the driver fast path, the star rounds hand their converged
+    // edges off as an eager localCheckpoint (LogicalRDD): already-computed
+    // blocks, no lineage back into the rounds — the closing corpus join
+    // can never recompute them
     val barriers = df.queryExecution.optimizedPlan.collect {
       case r: InMemoryRelation => r: Any
       case r: org.apache.spark.sql.execution.LogicalRDD => r: Any
       // small-graph fast path: labels are driver-computed union-find
-      // output shipped as literal data — no loop lineage exists at all
+      // output shipped as literal data — no round lineage exists at all
       case r: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => r: Any
     }
     assert(barriers.nonEmpty,
